@@ -870,9 +870,21 @@ def _bpe_oracle(n_merges: int) -> str:
     pair counts → argmax → greedy left-to-right rewrite.  The greedy
     non-overlap rule is stated positionally (overlapping matches only
     arise for self-pairs, forming runs of consecutive positions; keeping
-    even offsets within each run IS the left-to-right fold)."""
+    even offsets within each run IS the left-to-right fold).
+
+    Every CTE of the chain (vocab0 and each round's) is declared
+    ``AS MATERIALIZED`` so it is computed once.  DuckDB 1.0 inlines a
+    non-materialized CTE at every reference, and each round references
+    its predecessors several times (vocab{r} reads pos{r} directly and
+    through both keep{r} joins; match{r} reads best{r} twice), so without
+    the keyword the plan re-derives the chain per reference and its cost
+    multiplies with every round: at sf0.01 (31 distinct words, 4-core
+    15 GB host) K=4 took 6.7 s and one rewrite more (bpe2's oracle) ran
+    out of memory after minutes.  Materializing changes no result: every
+    CTE is deterministic (best{r} ties break on ``f DESC, lft, rgt``;
+    (w, i) is unique within match{r})."""
     sql = f"""
-WITH vocab0 AS (
+WITH vocab0 AS MATERIALIZED (
     SELECT w, string_split(w, '') AS syms, CAST(count(*) AS BIGINT) AS n
     FROM (SELECT unnest({tokens_sql('text')}) AS w FROM documents)
     GROUP BY w
@@ -880,27 +892,27 @@ WITH vocab0 AS (
     for r in range(1, n_merges + 1):
         prev = f"vocab{r - 1}"
         sql += f""",
-pairs{r} AS (
+pairs{r} AS MATERIALIZED (
     SELECT syms[CAST(i AS INTEGER)] AS lft,
            syms[CAST(i AS INTEGER) + 1] AS rgt,
            CAST(sum(n) AS BIGINT) AS f
     FROM {prev}, UNNEST(range(1, len(syms))) AS u(i)
     GROUP BY 1, 2
 ),
-best{r} AS (SELECT lft, rgt, f FROM pairs{r} ORDER BY f DESC, lft, rgt LIMIT 1)"""
+best{r} AS MATERIALIZED (SELECT lft, rgt, f FROM pairs{r} ORDER BY f DESC, lft, rgt LIMIT 1)"""
         if r < n_merges:
             sql += f""",
-pos{r} AS (
+pos{r} AS MATERIALIZED (
     SELECT w, n, syms, CAST(i AS INTEGER) AS i
     FROM {prev}, UNNEST(range(1, len(syms) + 1)) AS u(i)
 ),
-match{r} AS (
+match{r} AS MATERIALIZED (
     SELECT w, i FROM pos{r}
     WHERE i < len(syms)
       AND syms[i] = (SELECT lft FROM best{r})
       AND syms[i + 1] = (SELECT rgt FROM best{r})
 ),
-keep{r} AS (
+keep{r} AS MATERIALIZED (
     SELECT w, i FROM (
         SELECT w, i,
                row_number() OVER (PARTITION BY w, grp ORDER BY i) - 1 AS k
@@ -909,7 +921,7 @@ keep{r} AS (
               FROM match{r})
     ) WHERE k % 2 = 0
 ),
-vocab{r} AS (
+vocab{r} AS MATERIALIZED (
     SELECT p.w AS w, p.n AS n,
            list(CASE WHEN k.i IS NOT NULL
                      THEN p.syms[p.i] || p.syms[p.i + 1]
@@ -950,7 +962,10 @@ def bpe1_merge_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: the _bpe_oracle CTE chain ends with vocab{K-1} + best{K}; bpe2 needs the
 #: state AFTER all K merges, so its oracle extends the chain one rewrite
-#: further and selects the final vocabulary
+#: further and selects the final vocabulary.  The extra round is why the
+#: chain must stay MATERIALIZED (see _bpe_oracle): with the per-round CTEs
+#: inlined, DuckDB 1.0 took 7.7 s for this oracle at K=3 and ran out of
+#: memory at K=4 on sf0.01
 def _bpe_apply_oracle(n_merges: int) -> str:
     base = _bpe_oracle(n_merges + 1)
     # reuse the generator's vocab{n_merges} (the state after n_merges

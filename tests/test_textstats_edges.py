@@ -417,6 +417,38 @@ def test_bpe_apply_matches_python_reference(spark):
     assert got == {w: (apply_ref(w), c) for w, c in vocab.items()}
 
 
+def test_bpe_oracles_materialize_every_round_cte():
+    """DuckDB 1.0 inlines a non-MATERIALIZED CTE at every reference; the
+    BPE oracles reference each round's CTEs several times, so an inlined
+    chain's cost multiplies per round (bpe2's oracle ran out of memory at
+    sf0.01).  Every per-round CTE must stay declared AS MATERIALIZED."""
+    import re
+
+    from overturemaps_duckdb_spark.queries.textstats import (
+        _BPE_MERGES,
+        _bpe_apply_oracle,
+        _bpe_oracle,
+    )
+
+    k = _BPE_MERGES
+    cte = re.compile(r"^(?:WITH )?(\w+) AS (MATERIALIZED )?\(", re.M)
+    for sql, rewrites in (
+        (_bpe_oracle(k), k - 1),
+        (_bpe_apply_oracle(k), k),
+    ):
+        declared = {m.group(1): bool(m.group(2)) for m in cte.finditer(sql)}
+        per_round = [f"{n}{r}" for r in range(1, k + 1) for n in ("pairs", "best")]
+        per_round += [
+            f"{n}{r}"
+            for r in range(1, rewrites + 1)
+            for n in ("pos", "match", "keep", "vocab")
+        ]
+        missing = [n for n in per_round if n not in declared]
+        inlined = [n for n in per_round if not declared.get(n)]
+        assert not missing, missing
+        assert not inlined, inlined
+
+
 def test_char_entropy_frame_vectorized_no_shuffle(spark):
     """The Arrow path must stay a pure per-row pass: Arrow eval node
     present, no Exchange anywhere."""
