@@ -28,6 +28,7 @@ from overturemaps_duckdb_spark.compat import duck_sql
 from overturemaps_duckdb_spark.operators.fts import build_fts_index
 from overturemaps_duckdb_spark.plans.pipeline import Catalog
 from overturemaps_duckdb_spark.plans.runner import PipelineRunner
+from overturemaps_duckdb_spark.queries import _ship_package
 from overturemaps_duckdb_spark.session import (
     QueryRecord,
     QueryRunner,
@@ -59,6 +60,9 @@ class Engine:
     """Session-scoped engine: catalog + ingest + pipeline + SQL + state."""
 
     def __init__(self, spark: SparkSession, root: str):
+        # load projections run the package's pandas UDFs on the executors'
+        # Python workers, which cannot rely on the driver's cwd to find it
+        _ship_package(spark)
         self.spark = spark
         self.root = root
         self.session_state = SessionState(spark, root)

@@ -78,27 +78,30 @@ def _minhash_oracle(n_hashes: int = 16, bands: int = 4, k: int = 5) -> str:
         f"AND len(list_filter(range(1, {n_hashes + 1}), i -> "
         f"sa.sig[CAST(i AS INTEGER)] = sb.sig[CAST(i AS INTEGER)])) >= {gate_k}"
     )
+    # DuckDB 1.0 inlines a non-MATERIALIZED CTE at every reference, and
+    # docs/mins/bands/sigs are each read two or three times: materialized,
+    # d2's oracle runs in ~4 s at sf0.01 on a 4-core host instead of ~8 s
     return f"""
 WITH codes AS (
     SELECT doc_id AS id, {char_codes_sql('text')} AS c,
            length({norm_sql('text')}) AS len FROM documents
 ),
-docs AS (
+docs AS MATERIALIZED (
     SELECT id, {poly_shingles_from_codes_sql('c', 'len', k)} AS shingles
     FROM codes
 ),
-mins AS (
+mins AS MATERIALIZED (
     SELECT d.id, s.seed,
            list_min(list_transform(d.shingles,
                h -> (h * s.a + s.b) % {MINHASH_P})) AS mv
     FROM docs d, (VALUES {seeds}) s(seed, a, b)
 ),
-bands AS (
+bands AS MATERIALIZED (
     SELECT id, seed // {n_hashes // bands} AS band,
            md5(string_agg(CAST(mv AS VARCHAR), ',' ORDER BY seed)) AS bhash
     FROM mins GROUP BY id, seed // {n_hashes // bands}
 ),
-sigs AS (
+sigs AS MATERIALIZED (
     SELECT id, list(mv ORDER BY seed) AS sig FROM mins GROUP BY id
 ),
 cand AS (
@@ -429,14 +432,19 @@ def d5_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # the d2 pair CTEs, re-terminated into a recursive reachability closure:
-# cluster_id = min doc id reachable through the near-dup pair graph
+# cluster_id = min doc id reachable through the near-dup pair graph.
+# `edges` is read by every recursive step and `dpairs` twice, so both are
+# MATERIALIZED like the shared MinHash CTEs (see _minhash_oracle); inlined,
+# this oracle took ~35 s at sf0.01 on a 4-core host, materialized ~4 s.
 _CLUSTER_ORACLE = (
     _MINHASH_ORACLE.rsplit(
         "SELECT a_id, b_id, jaccard FROM pairs WHERE jaccard >= 0.5", 1
     )[0].replace("WITH codes", "WITH RECURSIVE codes", 1)
     + """
-, dpairs AS (SELECT a_id AS u, b_id AS v FROM pairs WHERE jaccard >= 0.5),
-edges AS (SELECT u, v FROM dpairs UNION ALL SELECT v, u FROM dpairs),
+, dpairs AS MATERIALIZED (
+    SELECT a_id AS u, b_id AS v FROM pairs WHERE jaccard >= 0.5
+),
+edges AS MATERIALIZED (SELECT u, v FROM dpairs UNION ALL SELECT v, u FROM dpairs),
 reach(id, r) AS (
     SELECT doc_id, doc_id FROM documents
     UNION

@@ -200,7 +200,7 @@ def o7_zorder_by_area(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ep1_load_theme(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP1 end-to-end (themes.js:204-410): stage lon-banded files → manifest
-    bbox pruning → batched budgeted ingest through the cache_select
+    bbox pruning → one budgeted scan through the cache_select
     projection → temp-view registration.  Budget set above the match count,
     so the result is exactly the bbox-filtered projection (the budgeted
     truncation tier is covered by s5/s6)."""
@@ -242,7 +242,6 @@ def ep1_load_theme(spark: SparkSession, sf_dir: str) -> DataFrame:
         bbox=(-150.0, -60.0, -50.0, 60.0),
         projection=projection,
         limit=10**6,
-        batch_size=2,
     )
     return res.df
 

@@ -32,6 +32,17 @@ def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 32g: local mode runs every task
+    in the driver JVM, and a heap sized past the host lets the JVM grow
+    until the kernel's OOM killer ends it."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (ValueError, OSError):
+        return "32g"
+    return f"{max(1024, min(32 * 1024, phys_mb // 2))}m"
+
+
 def get_spark(
     app_name: str = "overturemaps_duckdb_spark",
     cpus: int | None = None,
@@ -55,7 +66,7 @@ def get_spark(
         #     effective for the process that first creates the session.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
         # --- correctness-critical for oracle parity ---
         .config("spark.sql.session.timeZone", "UTC")

@@ -58,13 +58,30 @@ _AXIS_COLUMNS = {
 }
 
 
+class Manifest(tuple):
+    """``(indexed, unknown)`` as :func:`build_manifest` returns it, plus
+    ``num_rows``: every file's footer row count, read from the same footer
+    the bbox came from (a budgeted load skips its LIMIT when the surviving
+    files cannot exceed it)."""
+
+    num_rows: dict[str, int]
+
+    def __new__(cls, indexed, unknown, num_rows):
+        self = super().__new__(cls, (indexed, unknown))
+        self.num_rows = num_rows
+        return self
+
+
 def file_bbox(path: str) -> FileBBox | None:
     """Extract a file's bbox from footer statistics only (no data pages).
 
     Returns None when stats are missing — the caller must treat such files
     as always-overlapping, mirroring the reference's degrade-to-all-files
     behavior while its index builds (worker/index.js:146-172)."""
-    meta = pq.ParquetFile(path).metadata
+    return _footer_bbox(path, pq.ParquetFile(path).metadata)
+
+
+def _footer_bbox(path: str, meta) -> FileBBox | None:
     if meta.num_rows == 0:
         # empty file: never overlaps anything → always pruned
         return FileBBox(path, float("inf"), float("-inf"), float("inf"), float("-inf"))
@@ -102,17 +119,19 @@ def file_bbox(path: str) -> FileBBox | None:
     return FileBBox(path, xmin, xmax, ymin, ymax)
 
 
-def build_manifest(paths: list[str]) -> tuple[list[FileBBox], list[str]]:
-    """(indexed files, stat-less files).  Stat-less files always survive
-    pruning (degrade-to-all semantics)."""
-    indexed, unknown = [], []
+def build_manifest(paths: list[str]) -> Manifest:
+    """(indexed files, stat-less files), one footer read per file.
+    Stat-less files always survive pruning (degrade-to-all semantics)."""
+    indexed, unknown, num_rows = [], [], {}
     for p in paths:
-        fb = file_bbox(p)
+        meta = pq.ParquetFile(p).metadata
+        num_rows[p] = meta.num_rows
+        fb = _footer_bbox(p, meta)
         if fb is None:
             unknown.append(p)
         else:
             indexed.append(fb)
-    return indexed, unknown
+    return Manifest(indexed, unknown, num_rows)
 
 
 def prune_files(

@@ -8,7 +8,8 @@ Rebuilds the reference's lifecycle layer (SURVEY §1.1-5/6, §2.12):
 - :class:`SnapviewStore` — named materialized loads persisted as parquet
   checkpoints + JSON metadata (`snapviewDb.js:68-92`, `themes.js:195-242`:
   `COPY t TO parquet` → buffer cache → re-import), history-capped at 50
-  (`store.js:62`).
+  (`store.js:62`); a theme load's grid layout is adopted as its snapview
+  instead of being copied.
 - :func:`append_load_history` — the `_load_history` append-only telemetry
   log with a current-timestamp column (`themes.js:417-440`).
 - :func:`encode_url_state` / :func:`decode_url_state` — deflate-raw +
@@ -30,6 +31,7 @@ import zlib
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: snapview history cap (store.js:62,167)
 SNAPVIEW_CAP = 50
@@ -181,7 +183,16 @@ class SnapviewStore:
 
     save = `COPY "t" TO 't.parquet'` + metadata record (themes.js:195-202,
     snapviewDb.js:68-92); load = re-import (themes.js:237-263); history
-    capped at SNAPVIEW_CAP with oldest-first eviction (store.js:62)."""
+    capped at SNAPVIEW_CAP with oldest-first eviction (store.js:62).
+
+    A theme load does not copy its rows a second time: its grid layout
+    (sources/layout.py) IS the snapview.  :meth:`adopt_layout` writes a
+    record that points at the layout directory and carries its schema
+    (data columns + ``cx``/``cy``), cell size and the row count the load
+    already took; :meth:`load` reads such a record back with that schema
+    (no inference job) and drops ``cx``/``cy``.  The layout belongs to the
+    load that wrote it: :meth:`delete` (and eviction) removes the record
+    only, never the layout behind it."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -194,20 +205,58 @@ class SnapviewStore:
     def _data_path(self, sv_id: str) -> str:
         return os.path.join(self.root, sv_id)
 
-    def save(self, sv_id: str, df: DataFrame, meta: dict | None = None) -> dict:
-        df.write.mode("overwrite").parquet(self._data_path(sv_id))
+    def _write_record(self, sv_id: str, row_count: int, meta: dict) -> dict:
         record = {
             "id": sv_id,
             "created_at": time.time(),
-            "row_count": self.spark.read.parquet(self._data_path(sv_id)).count(),
-            **(meta or {}),
+            "row_count": row_count,
+            **meta,
         }
         with open(self._meta_path(sv_id), "w") as f:
             json.dump(record, f)
         self._evict()
         return record
 
+    def save(self, sv_id: str, df: DataFrame, meta: dict | None = None) -> dict:
+        df.write.mode("overwrite").parquet(self._data_path(sv_id))
+        return self._write_record(
+            sv_id,
+            self.spark.read.parquet(self._data_path(sv_id)).count(),
+            meta or {},
+        )
+
+    def adopt_layout(
+        self,
+        sv_id: str,
+        path: str,
+        schema: StructType,
+        cell_deg: float,
+        row_count: int,
+        meta: dict | None = None,
+    ) -> dict:
+        """Record the grid layout at ``path`` as snapview ``sv_id``;
+        ``schema`` is the layout's full schema, ``cx``/``cy`` included."""
+        layout = {"path": path, "schema": schema.jsonValue(), "cell_deg": cell_deg}
+        return self._write_record(sv_id, row_count, {**(meta or {}), "layout": layout})
+
+    def record(self, sv_id: str) -> dict | None:
+        try:
+            with open(self._meta_path(sv_id)) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return None
+
     def load(self, sv_id: str) -> DataFrame | None:
+        layout = (self.record(sv_id) or {}).get("layout")
+        if layout is not None:
+            if not os.path.isdir(layout["path"]):
+                return None
+            schema = StructType.fromJson(layout["schema"])
+            return (
+                self.spark.read.schema(schema)
+                .parquet(layout["path"])
+                .drop("cx", "cy")
+            )
         if not os.path.isdir(self._data_path(sv_id)):
             return None
         return self.spark.read.parquet(self._data_path(sv_id))
@@ -224,7 +273,9 @@ class SnapviewStore:
         return sorted(out, key=lambda r: r.get("created_at", 0))
 
     def delete(self, sv_id: str) -> bool:
-        existed = os.path.isdir(self._data_path(sv_id))
+        existed = os.path.isdir(self._data_path(sv_id)) or os.path.exists(
+            self._meta_path(sv_id)
+        )
         shutil.rmtree(self._data_path(sv_id), ignore_errors=True)
         try:
             os.remove(self._meta_path(sv_id))

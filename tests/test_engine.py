@@ -235,3 +235,153 @@ def test_pip_memo_evicts_dead_generations(spark, tmp_path):
     # the generation-0 entry is unreachable and must be gone
     assert len(eng._pip_memo) == 1
     assert all(k[0] == eng._load_gen for k in eng._pip_memo)
+
+
+def test_engine_ships_package_to_workers(spark, tmp_path, monkeypatch):
+    """Load projections run the package's pandas UDFs on the executors'
+    Python workers, so the Engine ships the package itself instead of
+    relying on the process's working directory."""
+    from overturemaps_duckdb_spark import queries
+
+    monkeypatch.setattr(queries, "_SHIPPED", set())
+    Engine(spark, root=str(tmp_path / "ship"))
+    assert spark.sparkContext.applicationId in queries._SHIPPED
+
+
+def _one_theme_engine(spark, tmp_path, name="places_one"):
+    """An Engine with one small point theme (sf0.001 customers in 4 staged
+    files) whose projection carries the geo pandas UDFs."""
+    from overturemaps_duckdb_spark.queries.spatial import _C_LAT, _C_LON
+
+    raw = spark.read.parquet(f"{SF_SMOKE}/customer.parquet").select(
+        F.col("c_custkey").cast("string").alias("id"),
+        F.col("c_name").alias("name"),
+        "c_mktsegment",
+        F.expr(_C_LON).alias("centroid_lon"),
+        F.expr(_C_LAT).alias("centroid_lat"),
+    )
+    p = os.path.join(str(tmp_path), name)
+    raw.repartition(4).write.mode("overwrite").parquet(p)
+    files = [os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")]
+
+    def projection(batch):
+        from overturemaps_duckdb_spark.functions.geo import st_point
+
+        return batch.select(
+            "id",
+            F.coalesce("name", F.lit("")).alias("display_name"),
+            F.concat_ws(" ", "name", "c_mktsegment").alias("search_name"),
+            F.col("c_mktsegment").alias("_f0"),
+            "centroid_lon",
+            "centroid_lat",
+        ).withColumn("geometry", st_point("centroid_lon", "centroid_lat"))
+
+    eng = Engine(spark, root=str(tmp_path / "engine"))
+    eng.register_theme(
+        "places/one", ThemeSpec(table=name, files=files, projection=projection)
+    )
+    return eng, raw
+
+
+def test_fresh_load_is_one_scan_one_write_one_count(spark, tmp_path):
+    """A fresh load reads the pruned files once, writes one parquet copy
+    (the grid layout, recorded as the snapview) and counts once: at most
+    7 Spark jobs, counted by job group."""
+    eng, raw = _one_theme_engine(spark, tmp_path)
+    bbox = (-180.0, -90.0, 0.0, 90.0)
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh-load-jobs", "one fresh theme load")
+    try:
+        res = eng.load_area(["places/one"], bbox)["places/one"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("fresh-load-jobs")
+    assert not res.cached and res.batches == 1
+    assert res.rows == raw.count() > 0
+    assert 0 < len(jobs) <= 7, jobs
+
+    # exactly one parquet copy: the snapview record points at the layout
+    store = eng.snapviews
+    assert not os.path.exists(os.path.join(store.root, "places_one"))
+    record = store.record("places_one")
+    assert record["layout"]["path"] == os.path.join(store.root, "_layout", "places_one")
+    assert record["layout"]["path"] == res.layout_path
+    assert record["row_count"] == res.rows and record["bbox"] == list(bbox)
+    # the generic load reads the record back without the cell columns
+    assert store.load("places_one").columns == res.df.columns
+
+
+def test_reused_load_matches_direct_load(spark, tmp_path):
+    """A snapview-served load returns the original columns (no cx/cy) and
+    the rows a direct load of the same bbox returns."""
+    from overturemaps_duckdb_spark.sources.ingest import load_theme
+
+    eng, _ = _one_theme_engine(spark, tmp_path)
+    first = eng.load_area(["places/one"], (-180.0, -90.0, 0.0, 90.0))["places/one"]
+    inner = (-120.0, -45.0, -40.0, 45.0)
+    reused = eng.load_area(["places/one"], inner)["places/one"]
+    assert reused.cached
+    assert reused.df.columns == first.df.columns
+    assert "cx" not in reused.df.columns and "cy" not in reused.df.columns
+    # the reuse scan is partition-pruned on the layout's cell columns
+    plan = reused.df._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in plan and "(cx" in plan
+    spec = eng.themes["places/one"]
+    direct = load_theme(
+        spark, table="places_one_direct", files=spec.files, bbox=inner,
+        projection=spec.projection,
+    )
+    assert reused.rows == direct.rows == reused.df.count() > 0
+    assert sorted(r["id"] for r in reused.df.collect()) == sorted(
+        r["id"] for r in direct.df.collect()
+    )
+
+
+def test_failed_layout_write_leaves_no_snapview_record(spark, tmp_path, monkeypatch):
+    """The record is dropped before the layout is overwritten: a write that
+    raises must not leave a record pointing at a partial layout."""
+    import pytest
+
+    from overturemaps_duckdb_spark.sources import layout
+
+    eng, _ = _one_theme_engine(spark, tmp_path)
+    eng.load_area(["places/one"], (-180.0, -90.0, 0.0, 90.0))
+    assert eng.snapviews.record("places_one") is not None
+
+    def broken(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(layout, "write_grid_partitioned", broken)
+    with pytest.raises(OSError):
+        eng.load_area(["places/one"], (-180.0, -90.0, 10.0, 90.0))
+    assert eng.snapviews.record("places_one") is None
+    assert eng.snapviews.list() == []
+
+
+def test_budget_limit_runs_once_inside_the_layout_write(spark, tmp_path, monkeypatch):
+    """The row budget is one LIMIT inside the layout write, left out when
+    the surviving files' footer row total already fits the budget; the
+    view, the layout and the snapview record all hold the counted rows."""
+    from overturemaps_duckdb_spark.sources import layout
+
+    eng, raw = _one_theme_engine(spark, tmp_path)
+    written = []
+    orig = layout.write_grid_partitioned
+
+    def capture(df, path, **kwargs):
+        written.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return orig(df, path, **kwargs)
+
+    monkeypatch.setattr(layout, "write_grid_partitioned", capture)
+    bbox = (-180.0, -90.0, 0.0, 90.0)
+    res = eng.load_area(["places/one"], bbox, limit=7)["places/one"]
+    assert "Limit 7" in written[-1]
+    assert res.rows == 7 == spark.table("places_one").count()
+    assert spark.read.parquet(res.layout_path).count() == 7
+    assert eng.snapviews.record("places_one")["row_count"] == 7
+
+    total = raw.count()
+    res = eng.load_area(["places/one"], (-180.0, -90.0, 1.0, 90.0), limit=total)
+    assert "Limit" not in written[-1]
+    assert res["places/one"].rows == total

@@ -206,3 +206,19 @@ def test_drop_table_covers_managed_tables(spark, tmp_path):
 
     with pytest.raises(ValueError):
         drop_table(spark, "_session_anything")
+
+
+def test_default_driver_memory_is_half_of_physical_capped(monkeypatch):
+    """Local mode runs every task in the driver JVM: the default heap is
+    half of physical memory, never more than the old 32g, so a default
+    session cannot grow past the host."""
+    from overturemaps_duckdb_spark import session
+
+    page = 4096
+    for phys_gb, want in ((15, f"{15 * 1024 // 2}m"), (128, "32768m")):
+        pages = phys_gb * (1 << 30) // page
+        monkeypatch.setattr(
+            session.os, "sysconf",
+            lambda name, pages=pages: page if name == "SC_PAGE_SIZE" else pages,
+        )
+        assert session._default_driver_memory() == want

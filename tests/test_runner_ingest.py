@@ -115,8 +115,8 @@ def test_sourceless_pipeline_runs_nothing(spark):
 
 
 def test_load_theme_budget_and_pruning(spark, tmp_path):
-    """EP1: budget stops reading batches once satisfied; pruning skips
-    out-of-bbox files entirely (themes.js:300-330, worker/index.js:174)."""
+    """EP1: the budget caps the rows loaded; pruning skips out-of-bbox
+    files entirely (themes.js:300-330, worker/index.js:174)."""
     import os
 
     from overturemaps_duckdb_spark.queries.spatial import customer_points
@@ -139,7 +139,6 @@ def test_load_theme_budget_and_pruning(spark, tmp_path):
         bbox=(-130.0, -90.0, -60.0, 90.0),  # overlaps bands 0..2 only
         projection=lambda raw: raw,
         limit=20,
-        batch_size=1,
     )
     assert res.files_scanned < len(files)  # pruning really skipped files
     assert res.rows == 20  # budget respected

@@ -462,3 +462,33 @@ def test_char_entropy_frame_vectorized_no_shuffle(spark):
     )
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan
+
+
+def test_dedup_cluster_oracles_materialize_shared_ctes():
+    """DuckDB 1.0 inlines a non-MATERIALIZED CTE at every reference.  The
+    d6 closure (and d7/sp1, built on it) reads the MinHash CTEs several
+    times and joins `edges` in every recursive step; inlined, d6's oracle
+    took ~35 s at sf0.01.  Every CTE referenced more than once, and the
+    `edges` the recursive step reads, must stay declared AS MATERIALIZED."""
+    import re
+
+    from overturemaps_duckdb_spark.queries.dedup import (
+        _CANONICAL_ORACLE,
+        _CLUSTER_ORACLE,
+        _SPLIT_ORACLE,
+    )
+
+    cte = re.compile(
+        r"^(?:WITH (?:RECURSIVE )?|, ?)?(\w+)(?:\([^)]*\))? AS (MATERIALIZED )?\(",
+        re.M,
+    )
+    for sql in (_CLUSTER_ORACLE, _CANONICAL_ORACLE, _SPLIT_ORACLE):
+        declared = {m.group(1): bool(m.group(2)) for m in cte.finditer(sql)}
+        refs = {n: len(re.findall(rf"\b{n}\b", sql)) - 1 for n in declared}
+        # `reach` is the recursive CTE itself: its self-reference is the
+        # iteration, not a second read
+        shared = {n for n, k in refs.items() if k > 1 and n != "reach"}
+        shared.add("edges")
+        assert shared >= {"docs", "mins", "bands", "sigs", "dpairs", "edges"}
+        inlined = sorted(n for n in shared if not declared[n])
+        assert not inlined, inlined
