@@ -76,6 +76,8 @@ class Engine:
         #: reference's release key (intersections.js:22-27): new data ⇒
         #: every cached intersection result is stale
         self._load_gen = 0
+        #: intersections() results by signature (current generation only)
+        self._pip_memo: dict = {}
 
     # -- catalog ----------------------------------------------------------
 
@@ -173,8 +175,6 @@ class Engine:
             tuple(sorted(polygon_tables)),
             tuple(round(v, 6) for v in bbox),  # rounded-bbox key (ref :28, toFixed(6))
         )
-        if not hasattr(self, "_pip_memo"):
-            self._pip_memo = {}
         if sig in self._pip_memo:
             return self._pip_memo[sig]
         # a new load generation makes every older entry permanently

@@ -6,9 +6,35 @@ merge-order-sensitive (``percentile_approx`` boundaries, quantiles.py),
 must be frozen before a conflicting write (incremental MinHash index,
 dedup.py), or anchors an iterative lineage cut (cluster propagation,
 dedup.py).
+
+This module also owns the one registry of session-lived artifacts — the
+twin of the state the reference keeps in its long-lived DuckDB handle
+(FTS helper tables, memoized results).  Its contract:
+
+- **Key.** Application id → slot name → caller key.  The application id
+  is implicit (``spark.sparkContext.applicationId``); each caller builds
+  the rest of its key from what identifies the data (a fixture's
+  realpath, a table's file stamp, a plan's ``semanticHash``) and, in a
+  shared slot, its own name.  :func:`cache_get` looks up,
+  :func:`cache_put` stores; a store under an existing key replaces the
+  value and refreshes its LRU position.
+- **Bound.** Each slot keeps at most ``max_entries`` (default
+  ``LRU_PERSIST_MAX_ENTRIES`` = 8 for slots that pin executor storage;
+  slots of small in-memory values such as schemas pass 256).  At most
+  ``LRU_PERSIST_MAX_APPS`` applications are kept; a new one drops the
+  least recently used other application's slots.
+- **Eviction.** Overflow drops the oldest entry and calls its
+  ``unpersist()`` if it has one (``DataFrame``, ``FtsIndex``).  Eviction
+  never changes values: an evicted frame recomputes from its lineage, an
+  evicted in-memory value is rebuilt by the caller on its next miss.
+- **Counters.** Hits, misses and evictions per (application, slot),
+  read through :func:`cache_stats`.
 """
 
 from __future__ import annotations
+
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 
@@ -65,16 +91,70 @@ def release_materialized(df: DataFrame | None) -> None:
         pass
 
 
-#: per-(application, slot) LRU registries backing :func:`lru_persist` —
-#: bounded by LRU_PERSIST_MAX_ENTRIES per slot and LRU_PERSIST_MAX_APPS
-#: total, so a long-lived process cycling sessions cannot grow this dict.
-_LRU_REGISTRY: dict = {}
+#: application id → slot → ``(entries, [hits, misses, evicts])``, where
+#: ``entries`` is an LRU ``OrderedDict`` (oldest first).  See the module
+#: docstring for the key, bound and eviction contract.
+_REGISTRY: OrderedDict = OrderedDict()
+_REGISTRY_LOCK = threading.Lock()
 LRU_PERSIST_MAX_ENTRIES = 8
 LRU_PERSIST_MAX_APPS = 4
 
 
+def _slot(spark, slot: str):
+    app = spark.sparkContext.applicationId
+    if app not in _REGISTRY:
+        while len(_REGISTRY) >= LRU_PERSIST_MAX_APPS:
+            # least recently used other application first: its session is
+            # usually stopped (handles inert); a live one merely rebuilds
+            _REGISTRY.popitem(last=False)
+        _REGISTRY[app] = {}
+    _REGISTRY.move_to_end(app)
+    return _REGISTRY[app].setdefault(slot, (OrderedDict(), [0, 0, 0]))
+
+
+def cache_get(spark, slot: str, key):
+    """The value stored under ``key`` in this application's ``slot``
+    (refreshing its LRU position), or None.  Counts a hit or a miss."""
+    with _REGISTRY_LOCK:
+        entries, counts = _slot(spark, slot)
+        if key in entries:
+            entries.move_to_end(key)
+            counts[0] += 1
+            return entries[key]
+        counts[1] += 1
+        return None
+
+
+def cache_put(spark, slot: str, key, value, *, max_entries: int = LRU_PERSIST_MAX_ENTRIES):
+    """Store ``value`` under ``key`` as the newest entry of ``slot``.
+    Past ``max_entries`` the oldest entry is dropped and ``unpersist``ed
+    if it has that method.  A value replaced under the same key is not
+    unpersisted (for a persisted plan it is the same cache entry)."""
+    with _REGISTRY_LOCK:
+        entries, counts = _slot(spark, slot)
+        entries[key] = value
+        entries.move_to_end(key)
+        while len(entries) > max_entries:
+            _, old = entries.popitem(last=False)
+            counts[2] += 1
+            if hasattr(old, "unpersist"):
+                try:
+                    old.unpersist()
+                except Exception:  # noqa: BLE001 — best-effort hygiene
+                    pass
+
+
+def cache_stats(spark, slot: str) -> dict:
+    """``{"hits", "misses", "evicts"}`` of this application's ``slot``
+    (zeros for a slot never used)."""
+    with _REGISTRY_LOCK:
+        slots = _REGISTRY.get(spark.sparkContext.applicationId, {})
+        counts = slots.get(slot, (None, [0, 0, 0]))[1]
+        return dict(zip(("hits", "misses", "evicts"), counts))
+
+
 def lru_persist(df: DataFrame, slot: str, *, max_entries: int = LRU_PERSIST_MAX_ENTRIES) -> DataFrame:
-    """``persist()`` with a bounded per-(session, slot) registry: the
+    """``persist()`` tracked in the session registry under ``slot``: the
     oldest cached plan is unpersisted once more than ``max_entries``
     DISTINCT plans have been persisted under the slot (VERDICT r13 #5 /
     ADVICE r13: the pl4 matched-id sets and the e6/e7 activity frame were
@@ -84,38 +164,14 @@ def lru_persist(df: DataFrame, slot: str, *, max_entries: int = LRU_PERSIST_MAX_
     the dedup closure).
 
     Spark's CacheManager dedupes cache entries by analyzed plan, so
-    repeated calls with the SAME plan stay one entry (tracked here by
-    ``semanticHash``: re-persisting refreshes its LRU position instead of
-    growing the registry).  Eviction only ever ``unpersist``s — a plan
-    evicted while still referenced recomputes correctly on its next
-    action; values can never change.  Registries of stopped applications
-    are dropped (their handles are inert) once more than
-    ``LRU_PERSIST_MAX_APPS`` applications have been seen."""
-    from collections import OrderedDict
-
+    repeated calls with the SAME plan stay one entry (keyed here by
+    ``semanticHash``: re-persisting is a hit that refreshes its LRU
+    position instead of growing the slot)."""
     df = df.persist()
     try:
-        app = df.sparkSession.sparkContext.applicationId
-        key = (app, slot)
-        if key not in _LRU_REGISTRY and len(_LRU_REGISTRY) >= LRU_PERSIST_MAX_APPS * 4:
-            # drop registries from other applications, oldest first; their
-            # sessions are usually stopped (handles inert), and a live
-            # sibling app merely loses eviction tracking, never values
-            for stale in list(_LRU_REGISTRY):
-                if stale[0] != app:
-                    _LRU_REGISTRY.pop(stale, None)
-        reg = _LRU_REGISTRY.setdefault(key, OrderedDict())
-        h = df.semanticHash()
-        if h in reg:
-            reg.move_to_end(h)
-        else:
-            reg[h] = df
-            while len(reg) > max_entries:
-                _, old = reg.popitem(last=False)
-                try:
-                    old.unpersist(False)
-                except Exception:  # noqa: BLE001 — best-effort hygiene
-                    pass
+        spark, h = df.sparkSession, df.semanticHash()
+        if cache_get(spark, slot, h) is None:
+            cache_put(spark, slot, h, df, max_entries=max_entries)
     except Exception:  # noqa: BLE001 — tracking is hygiene, never fatal
         pass
     return df

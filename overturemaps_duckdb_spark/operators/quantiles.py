@@ -82,6 +82,7 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from overturemaps_duckdb_spark.operators._util import cache_get, cache_put
 from overturemaps_duckdb_spark.operators._util import materialize as _materialize
 
 __all__ = ["grouped_quantile_cont", "grouped_quantile_pandas"]
@@ -105,6 +106,9 @@ MAX_BUCKETS = 1024
 #: assignment join — the correct many-group plan (per-group state is
 #: small when G is large; the one hot key is AQE skew-join territory).
 BROADCAST_GROUP_LIMIT = 2_000_000
+#: session-registry slot (operators/_util) of the memoized adaptive
+#: sizing decisions — small in-memory ints, so a wide bound
+SIZING_SLOT = "quantile_sizing"
 
 
 def _check_probs(probs: Sequence[float]) -> list[float]:
@@ -184,7 +188,6 @@ def grouped_quantile_cont(
     n_buckets: int | None = None,
     target_bucket_rows: int = TARGET_BUCKET_ROWS,
     accuracy: int | None = None,
-    sizing_cache: dict | None = None,
     sizing_key=None,
 ) -> DataFrame:
     """Exact per-group ``quantile_cont`` with linear interpolation.
@@ -201,28 +204,27 @@ def grouped_quantile_cont(
     ``percentile_approx`` boundary sketch accuracy (boundaries only
     steer bucket SIZES — exactness never depends on them).
 
-    ``sizing_cache``/``sizing_key`` memoize the ADAPTIVE sizing decision
-    (VERDICT r06 #5, the FTS-index pattern): the probe is a real job
+    ``sizing_key`` (None = no memo) memoizes the ADAPTIVE sizing decision
+    in the session registry's :data:`SIZING_SLOT` (operators/_util;
+    VERDICT r06 #5, the FTS-index pattern): the probe is a real job
     (~0.2 s fixed at sf0.1 — measured to be job overhead, not bytes, so
     it can only be skipped, not shrunk), and a caller issuing repeated
     quantile queries over the same stable table pays it once.  On a
-    cache hit the stored bucket count is used exactly like a forced
+    hit the stored bucket count is used exactly like a forced
     ``n_buckets`` (a hit of 1 runs the no-job single-aggregate path);
     on a miss the probe runs and the decision is stored.  Key identity
-    == data identity is the CALLER's contract (key on something that
-    changes when the table does — app id + path, like the FTS memo);
-    a stale hit can only mis-route performance, never values (exactness
-    is bucket-count-independent, pinned in tests).
+    == data identity is the CALLER's contract (the slot is shared: key
+    on the caller's name plus something that changes when the table
+    does, like ``queries.table_key``); a stale hit can only mis-route
+    performance, never values (exactness is bucket-count-independent,
+    pinned in tests).
     """
     probs = _check_probs(probs)
     group_cols = list(group_cols)
     out_names = _check_names(probs, out_names, group_cols, n_name)
-    if (
-        n_buckets is None
-        and sizing_cache is not None
-        and sizing_key in sizing_cache
-    ):
-        n_buckets = sizing_cache[sizing_key]
+    memo = sizing_key is not None and n_buckets is None
+    if memo:
+        n_buckets = cache_get(df.sparkSession, SIZING_SLOT, sizing_key)
 
     src = df.select(
         *group_cols, F.col(value_col).cast("double").alias("_v")
@@ -274,22 +276,19 @@ def grouped_quantile_cont(
         ).first()
         max_nn = probe[0] or 0
         n_groups = probe[1]
-        if sizing_cache is not None and sizing_key is not None:
-            sizing_cache[sizing_key] = (
-                1
-                if max_nn <= target_bucket_rows
-                else min(
-                    MAX_BUCKETS,
-                    max(16, math.ceil(max_nn / target_bucket_rows)),
-                )
-            )
-        if max_nn <= target_bucket_rows:
+        B = (
+            1
+            if max_nn <= target_bucket_rows
+            else min(MAX_BUCKETS, max(16, math.ceil(max_nn / target_bucket_rows)))
+        )
+        if memo:
+            cache_put(df.sparkSession, SIZING_SLOT, sizing_key, B, max_entries=256)
+        if B == 1:
             # B=1 fast path: the probe's lazy checkpoint already
             # materialized the stats blocks, but the percentile agg
             # needs neither them nor any join — drop straight to the
             # single-aggregation plan (module doc, "B=1 fast path").
             return _percentile_agg(src, group_cols, probs, out_names, n_name)
-        B = min(MAX_BUCKETS, max(16, math.ceil(max_nn / target_bucket_rows)))
     # Few groups → force-broadcast the reduced frames (checkpoints have no
     # stats; without the hint the planner shuffles the data — see NB).
     # Many groups → the reduced frames are themselves big: leave every

@@ -26,6 +26,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from overturemaps_duckdb_spark.operators._util import cache_get, cache_put
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -154,15 +156,18 @@ def _ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(app_id)
 
 
-#: (appId, realpath(sf_dir), table) → parquet schema.  Schema inference is
-#: a Spark JOB (footer read) per ``spark.read.parquet`` call, and every
-#: query re-opens its tables — ~0.1 s of pure repeated work per call at
-#: ANY scale (on object stores it is a remote footer fetch).  Memoizing
-#: the SCHEMA only (never data, never the DataFrame — each call still
-#: returns a fresh plan with fresh expression ids, so self-joins of two
-#: ``t()`` results stay unambiguous) mirrors the reference engine's
-#: long-lived table handles (duckdb.js:7-28) without caching any result.
-_SCHEMA_CACHE: dict[tuple[str, str, str], object] = {}
+def table_key(sf_dir: str, name: str) -> tuple:
+    """(realpath(sf_dir), table, file stamp) — the identity a session memo
+    over one fixture table keys on.  The stamp is ``(mtime_ns, size)``
+    (ADVICE r13): a table file rewritten mid-session gets a new key
+    instead of a stale hit.  One os.stat — noise next to any job a hit
+    saves."""
+    try:
+        st = os.stat(f"{sf_dir}/{name}.parquet")
+        stamp = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        stamp = None  # let spark.read raise its own error path
+    return (os.path.realpath(sf_dir), name, stamp)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -187,25 +192,19 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    # (mtime_ns, size) in the key (ADVICE r13): a table file rewritten with
-    # a different schema mid-session would otherwise silently read through
-    # the stale schema (missing columns as nulls) instead of re-inferring.
-    # One os.stat per call — noise next to the inference job it replaces.
-    try:
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stamp = None  # let spark.read raise its own error path
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        name,
-        stamp,
-    )
-    schema = _SCHEMA_CACHE.get(key)
+    # Schema memo: inference is a Spark JOB (footer read) per
+    # ``spark.read.parquet`` call, and every query re-opens its tables —
+    # ~0.1 s of pure repeated work per call at ANY scale.  Only the SCHEMA
+    # is kept (never data, never the DataFrame — each call still returns a
+    # fresh plan with fresh expression ids, so self-joins of two ``t()``
+    # results stay unambiguous), mirroring the reference engine's
+    # long-lived table handles (duckdb.js:7-28).  256 entries: a sweep
+    # over many fixtures must not cycle the LRU into re-inference.
+    key = table_key(sf_dir, name)
+    schema = cache_get(spark, "table_schema", key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        cache_put(spark, "table_schema", key, df.schema, max_entries=256)
         return df
     # explicit schema ⇒ no inference job; the stored schema was inferred
     # under the same session confs (nanosAsLong set above before the first

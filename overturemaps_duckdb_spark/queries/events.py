@@ -17,7 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from overturemaps_duckdb_spark.queries import query, t, us_col
+from overturemaps_duckdb_spark.queries import query, t, table_key, us_col
 
 #: 5-minute tumbling window, in µs
 WINDOW_US = 300_000_000
@@ -270,14 +270,6 @@ def i3_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "events_seen", "value_cents")
 
 
-#: session-lifetime sizing memo for e4's adaptive bucket probe — keyed
-#: (applicationId, realpath(sf_dir)) like the FTS index cache; dies with
-#: the session, so fixture regeneration between sessions can't serve a
-#: stale decision (and a stale decision could only mis-route perf, never
-#: values).
-_E4_SIZING: dict = {}
-
-
 @query(
     "e4_grouped_quantiles",
     oracle="""
@@ -303,12 +295,11 @@ def e4_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     `operators.quantiles.grouped_quantile_pandas` (equality pinned in
     tests/test_quantiles.py).
 
-    The adaptive sizing probe memoizes per (app, sf_dir) — the FTS-index
-    pattern (VERDICT r06 #5): the first call in a session pays the ~one
-    fixed probe job, repeat calls over the same fixture route directly
-    (a B=1 decision re-runs as the no-sizing single aggregate)."""
-    import os as _os
-
+    The adaptive sizing probe memoizes per (session, events table file)
+    — the FTS-index pattern (VERDICT r06 #5): the first call in a session
+    pays the ~one fixed probe job, repeat calls over the same fixture
+    route directly (a B=1 decision re-runs as the no-sizing single
+    aggregate), and a rewritten events file probes again."""
     from overturemaps_duckdb_spark.operators.quantiles import (
         grouped_quantile_cont,
     )
@@ -321,11 +312,7 @@ def e4_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         [0.5, 0.9],
         out_names=["p50", "p90"],
         n_name="n",
-        sizing_cache=_E4_SIZING,
-        sizing_key=(
-            spark.sparkContext.applicationId,
-            _os.path.realpath(sf_dir),
-        ),
+        sizing_key=("e4", *table_key(sf_dir, "events")),
     )
     return out.select(
         "event_type",

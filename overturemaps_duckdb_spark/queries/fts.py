@@ -9,6 +9,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from overturemaps_duckdb_spark.operators._util import cache_get, cache_put
 from overturemaps_duckdb_spark.operators.fts import (
     FtsIndex,
     bm25_topk,
@@ -32,12 +33,6 @@ QUERY_TERMS = ["table", "scan", "merge"]
 #: to tokenize_query(QUERY_TEXT, 'porter') by tests/test_stem.py
 STEMMED_QUERY_TERMS = ["tabl", "scan", "merg"]
 
-#: session-lifetime index cache — `PRAGMA create_fts_index` materializes
-#: helper tables once and every later query reads them (fts.js:51-68);
-#: the Spark twin is a persisted FtsIndex memoized per (app, table, sf_dir).
-_INDEX_CACHE: dict[tuple[str, str, str], FtsIndex] = {}
-
-
 def fts_index_for(
     spark: SparkSession,
     sf_dir: str,
@@ -46,6 +41,11 @@ def fts_index_for(
     text_col: str,
     stemmer: str | None = "porter",
 ) -> FtsIndex:
+    """Session-lifetime persisted index over one fixture table —
+    `PRAGMA create_fts_index` materializes helper tables once and every
+    later query reads them (fts.js:51-68).  Held in the session registry's
+    ``fts_index`` slot (operators/_util), which unpersists the least
+    recently used index past its bound."""
     import os
 
     # realpath key (like the e4 sizing memo): the same fixture addressed
@@ -53,18 +53,13 @@ def fts_index_for(
     # persist a SECOND full inverted index in executor storage.  The
     # stemmer is part of the key — a porter index and an unstemmed index
     # over the same table are different indexes (different term columns).
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        table,
-        stemmer,
-    )
-    idx = _INDEX_CACHE.get(key)
+    key = (os.path.realpath(sf_dir), table, stemmer)
+    idx = cache_get(spark, "fts_index", key)
     if idx is None:
         idx = build_fts_index(
             t(spark, sf_dir, table), id_col, text_col, stemmer=stemmer
         ).persist()
-        _INDEX_CACHE[key] = idx
+        cache_put(spark, "fts_index", key, idx)
     return idx
 
 

@@ -34,6 +34,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from overturemaps_duckdb_spark.functions.geo import st_point
+from overturemaps_duckdb_spark.operators._util import cache_get, cache_put
 from overturemaps_duckdb_spark.operators.fts import build_fts_index
 from overturemaps_duckdb_spark.plans.pipeline import Catalog, Node, compile_pipeline
 from overturemaps_duckdb_spark.queries import query, t
@@ -375,12 +376,10 @@ def pl5_exclude_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pl6 — FTS search: BM25 score + ORDER BY _score DESC
 # ---------------------------------------------------------------------------
 
-_PL_FTS_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _theme_doc_index(spark: SparkSession, sf_dir: str, docs: DataFrame):
     """Session-lifetime materialized index over the ingested theme (the
-    reference's PRAGMA-built helper tables persist across queries too).
+    reference's PRAGMA-built helper tables persist across queries too),
+    held in the session registry's ``theme_fts_index`` slot.
 
     realpath key (r9 review, matching the r8 fix in queries/fts
     .fts_index_for): the same fixture addressed via './sf0.01' vs its
@@ -388,11 +387,11 @@ def _theme_doc_index(spark: SparkSession, sf_dir: str, docs: DataFrame):
     persist a second copy in executor storage."""
     import os
 
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    idx = _PL_FTS_CACHE.get(key)
+    key = os.path.realpath(sf_dir)
+    idx = cache_get(spark, "theme_fts_index", key)
     if idx is None:
         idx = build_fts_index(docs, "id", "search_name").persist()
-        _PL_FTS_CACHE[key] = idx
+        cache_put(spark, "theme_fts_index", key, idx)
     return idx
 
 

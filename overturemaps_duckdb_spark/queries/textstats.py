@@ -28,7 +28,7 @@ from overturemaps_duckdb_spark.operators.textprep import (
     repetition_signals,
     sliding_chunks,
 )
-from overturemaps_duckdb_spark.queries import query, t
+from overturemaps_duckdb_spark.queries import query, t, table_key
 from overturemaps_duckdb_spark.queries._sql import (
     md5_long_sql,
     norm_sql,
@@ -729,8 +729,6 @@ def x20_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-speed projection.  Safe at 6 dp BY ARITHMETIC: nll values are
     1e-6-quantized, so tercile interpolation offsets are m/3 micro-units
     — never half-grid, so the rounded cuts can't flip cross-engine."""
-    import os as _os
-
     from overturemaps_duckdb_spark.operators.quantiles import (
         grouped_quantile_cont,
     )
@@ -751,11 +749,7 @@ def x20_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nll",
         [1.0 / 3, 2.0 / 3],
         out_names=["c1", "c2"],
-        sizing_cache=_X20_SIZING,
-        sizing_key=(
-            spark.sparkContext.applicationId,
-            _os.path.realpath(sf_dir),
-        ),
+        sizing_key=("x20", *table_key(sf_dir, "documents")),
     ).select(F.round("c1", 6).alias("c1"), F.round("c2", 6).alias("c2"))
     bucket = (
         F.when(F.col("nll") <= F.col("c1"), F.lit("head"))
@@ -765,9 +759,6 @@ def x20_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nll.crossJoin(F.broadcast(cuts)).select(
         "doc_id", "n_tokens", "nll", bucket.alias("bucket")
     )
-
-
-_X20_SIZING: dict = {}
 
 
 @query(

@@ -103,7 +103,7 @@ def test_engine_end_to_end(spark, tmp_path):
     bbox = (-180.0, -90.0, 0.0, 90.0)
     r1 = eng.intersections("places_customer", ["places_customer"], bbox)
     assert (eng._load_gen, "places_customer", ("places_customer",),
-            tuple(round(v, 3) for v in bbox)) in eng._pip_memo
+            tuple(round(v, 6) for v in bbox)) in eng._pip_memo
     r2 = eng.intersections("places_customer", ["places_customer"], bbox)
     assert r1 is r2  # memo hit returns the same object
 

@@ -426,28 +426,42 @@ def test_reliable_checkpoint_when_dir_configured(spark, tmp_path):
         assert not sc._jsc.sc().getCheckpointDir().isDefined()
 
 
-def test_sizing_cache_memoizes_probe(spark):
+def test_sizing_key_memoizes_probe(spark):
     """VERDICT r06 #5: the adaptive sizing probe is a real job a repeat
     caller shouldn't re-pay.  A miss probes and stores the decision; a
     hit routes like a forced n_buckets — a stored 1 must produce the
     no-join single-aggregate plan with NO sizing job, a stored B>1 the
     bucketed machinery — and values match DuckDB on every route."""
+    from overturemaps_duckdb_spark.operators._util import cache_get, cache_stats
+    from overturemaps_duckdb_spark.operators.quantiles import SIZING_SLOT
+
     rows = [(f"g{i % 3}", float(i % 41)) for i in range(600)]
     df = _mk(spark, rows)
     want = _oracle_rows(rows, PROBS)
 
-    cache: dict = {}
-    out = grouped_quantile_cont(
-        df, ["g"], "v", PROBS, sizing_cache=cache, sizing_key="k1"
-    )
+    def stored(key):
+        return cache_get(spark, SIZING_SLOT, key)
+
+    def delta(fn):
+        before = cache_stats(spark, SIZING_SLOT)
+        out = fn()
+        after = cache_stats(spark, SIZING_SLOT)
+        return out, {k: after[k] - before[k] for k in after}
+
+    k1 = ("test_sizing_key", "k1")
+    out, d = delta(lambda: grouped_quantile_cont(
+        df, ["g"], "v", PROBS, sizing_key=k1
+    ))
     _assert_close(_spark_rows(out), want)
-    assert cache == {"k1": 1}  # every group fits -> fast path stored
+    assert d == {"hits": 0, "misses": 1, "evicts": 0}
+    assert stored(k1) == 1  # every group fits -> fast path stored
 
     # hit: same single-aggregation plan as a FORCED n_buckets=1 (the
     # probe-free route — no stats subtree, no join)
-    out2 = grouped_quantile_cont(
-        df, ["g"], "v", PROBS, sizing_cache=cache, sizing_key="k1"
-    )
+    out2, d = delta(lambda: grouped_quantile_cont(
+        df, ["g"], "v", PROBS, sizing_key=k1
+    ))
+    assert d == {"hits": 1, "misses": 0, "evicts": 0}
     plan = out2._jdf.queryExecution().executedPlan().toString().split(
         "== Initial Plan =="
     )[0]
@@ -456,27 +470,26 @@ def test_sizing_cache_memoizes_probe(spark):
     _assert_close(_spark_rows(out2), want)
 
     # adaptive big-group decision is stored and replayed as bucketed
-    cache2: dict = {}
+    k2 = ("test_sizing_key", "k2")
     out3 = grouped_quantile_cont(
-        df, ["g"], "v", PROBS,
-        target_bucket_rows=50, sizing_cache=cache2, sizing_key="k2",
+        df, ["g"], "v", PROBS, target_bucket_rows=50, sizing_key=k2,
     )
     _assert_close(_spark_rows(out3), want)
-    assert cache2["k2"] >= 16
-    out4 = grouped_quantile_cont(
-        df, ["g"], "v", PROBS,
-        target_bucket_rows=50, sizing_cache=cache2, sizing_key="k2",
-    )
+    assert stored(k2) >= 16
+    out4, d = delta(lambda: grouped_quantile_cont(
+        df, ["g"], "v", PROBS, target_bucket_rows=50, sizing_key=k2,
+    ))
+    assert d["hits"] == 1
     assert "_bucket" in out4._jdf.queryExecution().optimizedPlan().toString()
     _assert_close(_spark_rows(out4), want)
 
-    # forced n_buckets ignores the cache entirely (no store, no read)
-    cache3: dict = {}
-    grouped_quantile_cont(
-        df, ["g"], "v", PROBS, n_buckets=1,
-        sizing_cache=cache3, sizing_key="k3",
-    ).collect()
-    assert cache3 == {}
+    # forced n_buckets ignores the memo entirely (no store, no read)
+    k3 = ("test_sizing_key", "k3")
+    _, d = delta(lambda: grouped_quantile_cont(
+        df, ["g"], "v", PROBS, n_buckets=1, sizing_key=k3,
+    ).collect())
+    assert d == {"hits": 0, "misses": 0, "evicts": 0}
+    assert stored(k3) is None
 
 
 def test_quantile_cont_randomized_differential(spark):

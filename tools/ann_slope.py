@@ -68,7 +68,7 @@ def main() -> None:
     run_names = [n for n in NAMES if not only or n in only]
     run_ivf = not only or "ivf" in only
     run_pq = not only or "pq" in only
-    spark = get_spark("ann_slope", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("ann_slope")
     rows = t(spark, sf_dir, "embeddings").count()
     out: dict[str, float] = {}
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for headline queries → plans/r14/<q>_<tag>.txt.
+"""Capture .explain('formatted') for headline queries → plans/<round>/<q>_<tag>.txt.
 
-Usage: python tools/explain_r14.py <tag> [query ...]
+Usage: python tools/explain.py <round> <tag> [query ...]
 With no query args, captures the whole bench HEADLINE set.
 
 Also prints a one-line plan-shape summary per query (Exchange count, join
@@ -38,8 +38,9 @@ def shape(plan: str) -> str:
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     if not names:
         import importlib
 
@@ -49,10 +50,10 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r14",
+        rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("explain_r14", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark(f"explain_{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         try:

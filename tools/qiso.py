@@ -26,7 +26,7 @@ _q.load_all()
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("qiso", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("qiso")
     spark.sparkContext.setLogLevel("FATAL")
     for warm in names:
         _q.QUERIES[warm](spark, "/root/testdata/sf0.001").write.format(

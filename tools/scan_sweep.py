@@ -28,7 +28,7 @@ _q.load_all()
 def main() -> None:
     names = sys.argv[1:] or sorted(_q.QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spark = get_spark("scan_sweep", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("scan_sweep")
     spark.sparkContext.setLogLevel("FATAL")
     flagged, errs = [], []
     for name in names:

@@ -25,7 +25,7 @@ _q.load_all()
 def main() -> None:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    spark = get_spark("stageprof", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("stageprof")
     spark.sparkContext.setLogLevel("FATAL")
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId

@@ -51,7 +51,7 @@ def main() -> None:
     from overturemaps_duckdb_spark.session import get_spark
     from overturemaps_duckdb_spark.streaming.windows import followup_events_join
 
-    spark = get_spark(f"state_ab_{heap}_{store}", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark(f"state_ab_{heap}_{store}")
     out: dict[str, object] = {"fixture": fixture, "heap": heap, "store": store}
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")  # run_to_batch's state sizing
