@@ -18,8 +18,11 @@ Design notes (scale):
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
 import pandas as pd
+import pyarrow
 import pyspark.sql.functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
@@ -138,10 +141,36 @@ def st_centroid_lonlat(geom: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"lon": lons, "lat": lats})
 
 
+def _geojson(b: bytes | None) -> str | None:
+    return None if b is None else wkb.as_geojson(wkb.loads(b))
+
+
 @pandas_udf(StringType())
 def st_asgeojson(geom: pd.Series) -> pd.Series:
     """G3 — WKB→GeoJSON at the output boundary only (query.js:81)."""
-    return geom.map(lambda b: None if b is None else wkb.as_geojson(wkb.loads(b)))
+    return geom.map(_geojson)
+
+
+def geojson_batches(
+    batches: Iterator[pyarrow.RecordBatch], drop: tuple[str, ...] = ()
+) -> Iterator[pyarrow.RecordBatch]:
+    """G3 as a ``mapInArrow`` function: each batch with its ``geometry``
+    column replaced, in the same position, by ``geojson`` (the
+    :func:`st_asgeojson` kernel, NULL → NULL); columns named in ``drop``
+    are left out.  A map is not a Project, so the optimizer cannot push it
+    through a Union or below a LIMIT the way it pushes the UDF's Project."""
+    for batch in batches:
+        names = batch.schema.names
+        i = names.index("geometry")
+        cols = list(batch.columns)
+        cols[i] = pyarrow.array(
+            [_geojson(b) for b in cols[i].to_pylist()], pyarrow.string()
+        )
+        names[i] = "geojson"
+        keep = [j for j, n in enumerate(names) if n not in drop]
+        yield pyarrow.RecordBatch.from_arrays(
+            [cols[j] for j in keep], names=[names[j] for j in keep]
+        )
 
 
 @pandas_udf(BooleanType())

@@ -15,14 +15,20 @@ per-source balanced LIMIT          → .limit(ceil(limit/n)) per branch
 matched_i CTEs (EXISTS both ways)  → bidirectional semi-join id sets
 NOT EXISTS exclude                 → left-anti band join
 bbox WHERE on centroids            → native range predicates (pushed down)
-ST_AsGeoJSON in outer SELECT only  → late-materialized geojson column
+ST_AsGeoJSON in outer SELECT only  → one mapInArrow beneath the final
+                                     ORDER BY … LIMIT
 ORDER BY _score DESC + LIMIT       → orderBy(desc).limit → TakeOrderedAndProject
 
 Scale notes: sources union without shuffling; the only shuffles are the
-matched-id `distinct` and (with FTS) the postings groupBy.  Each spatial
-filter's exact predicate runs on band-join survivors only; the band
-condition stays native so Catalyst can pick broadcast vs shuffle from
-statistics, and the final top-k never materializes the full result.
+matched-id `distinct` and (with FTS) the postings groupBy.  Every
+per-source and final ORDER BY … LIMIT plans as TakeOrderedAndProject, so a
+union-mode edit is one job.  That holds because GeoJSON is an Arrow map,
+not a UDF Project: the optimizer pushes a deterministic Project through
+the Union and below each branch's LIMIT, where the Python eval node splits
+Limit from Sort into a sampled, range-partitioned global sort per branch.
+Each spatial filter's exact predicate runs on band-join survivors only;
+the band condition stays native so Catalyst can pick broadcast vs shuffle
+from statistics, and the final top-k never materializes the full result.
 
 Determinism: the reference's bare ``LIMIT n`` (pipeline.js:99,178) is
 insertion-order-dependent — meaningless on a distributed engine.  With
@@ -35,12 +41,19 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field as dc_field
-from functools import reduce
+from functools import partial, reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    BinaryType,
+    DoubleType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from overturemaps_duckdb_spark.functions.geo import st_asgeojson
+from overturemaps_duckdb_spark.functions.geo import geojson_batches
 from overturemaps_duckdb_spark.operators._util import lru_persist as _lru_persist
 from overturemaps_duckdb_spark.operators.fts import (
     FtsIndex,
@@ -64,16 +77,17 @@ DEFAULT_DISTANCE_M = 250.0
 #: default result limit (store.js:26)
 DEFAULT_LIMIT = 3000
 
-#: the fixed column spine of a cached theme table (query.js:35-44)
-THEME_COLS = (
-    "id",
-    "display_name",
-    "search_name",
-    "geometry",
-    "geom_type",
-    "centroid_lon",
-    "centroid_lat",
-)
+#: the fixed column spine of a cached theme table (query.js:35-44) and its
+#: types, which also type the compiled output (geometry becomes geojson)
+THEME_COLS = {
+    "id": StringType(),
+    "display_name": StringType(),
+    "search_name": StringType(),
+    "geometry": BinaryType(),
+    "geom_type": StringType(),
+    "centroid_lon": DoubleType(),
+    "centroid_lat": DoubleType(),
+}
 
 
 @dataclass
@@ -316,21 +330,31 @@ def compile_pipeline(
                 assume_points=True,
             )
 
-    # -- outer projection: late GeoJSON (pipeline.js:103-111)
-    out_cols = [
-        F.col("id"),
-        F.col("display_name"),
-        F.col("search_name"),
-        st_asgeojson(F.col("geometry")).alias("geojson"),
-        F.col("geom_type"),
-        F.col("centroid_lon"),
-        F.col("centroid_lat"),
-        *[F.col(f"_f{i}") for i in range(max_f)],
-        F.col("_source"),
+    # -- outer projection: late GeoJSON (pipeline.js:103-111) as ONE Arrow
+    #    map beneath the final ORDER BY … LIMIT.  A UDF Project here would be
+    #    pushed through the Union and below each branch's LIMIT, splitting
+    #    every Limit(Sort) into a range-partitioned global sort; the map
+    #    stays where it is, so each branch and the root plan as top-k.  It
+    #    must sit below the final limit, not above: a Project there is
+    #    pushed back below it, and above a map AQE drops the non-root
+    #    GlobalLimit once the run-time row count fits and re-plans a global
+    #    sort.  Its schema is the per-source select's spine, known without
+    #    analysis.
+    spine = [
+        *THEME_COLS.items(),
+        *((f"_f{i}", StringType()) for i in range(max_f)),
+        ("_source", StringType()),
     ]
     if searching:
-        out_cols.append(F.col("_score"))
-    base = base.select(*out_cols)
+        spine.append(("_score", DoubleType()))
+    schema = StructType([
+        StructField("geojson", StringType()) if c == "geometry"
+        else StructField(c, t)
+        for c, t in spine
+    ])
+    base = base.mapInArrow(
+        partial(geojson_batches, drop=() if searching else ("_score",)), schema
+    )
 
     # -- ORDER BY _score DESC iff searching; final LIMIT (pipeline.js:177-178)
     if searching:

@@ -7,7 +7,7 @@ reference step                              → here
 cache check via bboxContains (themes.js:212)  → snapview superset-bbox reuse
 IndexedDB parquet restore (themes.js:237-263) → partition-pruned layout read
 worker /files bbox pruning (themes.js:267)    → manifest.prune_files
-schema probe DESCRIBE (themes.js:294-297)     → spark.read.parquet().schema
+schema probe DESCRIBE (themes.js:294-297)     → footer schema from the manifest
 buildCacheSelect projection (query.js:10-45)  → cache_select()
 batched CTAS/INSERT w/ budget (themes.js:300) → one scan, one LIMIT
 RTREE/FTS index build (themes.js:351-356)     → grid layout + FTS index
@@ -39,6 +39,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 from overturemaps_duckdb_spark.operators._util import materialize
@@ -208,8 +209,14 @@ def load_theme(
     # 3. one scan of the survivors with one budget LIMIT (themes.js:300-330).
     #    The LIMIT executes exactly once, inside the job that materializes
     #    the rows, and is left out when the footers already prove the
-    #    survivors hold no more than `limit` rows.
-    loaded = projection(spark.read.parquet(*(survivors or files)))
+    #    survivors hold no more than `limit` rows.  The schema is the one
+    #    the manifest read from the first scanned file's footer, so no
+    #    inference job runs.
+    scanned = survivors or files
+    loaded = projection(
+        spark.read.schema(from_arrow_schema(manifest.schemas[scanned[0]]))
+        .parquet(*scanned)
+    )
     if not survivors:
         loaded = loaded.where(F.lit(False))
     else:

@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 
@@ -59,16 +60,20 @@ _AXIS_COLUMNS = {
 
 
 class Manifest(tuple):
-    """``(indexed, unknown)`` as :func:`build_manifest` returns it, plus
-    ``num_rows``: every file's footer row count, read from the same footer
-    the bbox came from (a budgeted load skips its LIMIT when the surviving
-    files cannot exceed it)."""
+    """``(indexed, unknown)`` as :func:`build_manifest` returns it, plus two
+    per-file facts read from the same footer the bbox came from:
+    ``num_rows``, the footer row count (a budgeted load skips its LIMIT
+    when the surviving files cannot exceed it), and ``schemas``, the Arrow
+    schema (a load reads with the first survivor's schema, as Spark's own
+    inference would, without running an inference job)."""
 
     num_rows: dict[str, int]
+    schemas: dict[str, pa.Schema]
 
-    def __new__(cls, indexed, unknown, num_rows):
+    def __new__(cls, indexed, unknown, num_rows, schemas):
         self = super().__new__(cls, (indexed, unknown))
         self.num_rows = num_rows
+        self.schemas = schemas
         return self
 
 
@@ -122,16 +127,18 @@ def _footer_bbox(path: str, meta) -> FileBBox | None:
 def build_manifest(paths: list[str]) -> Manifest:
     """(indexed files, stat-less files), one footer read per file.
     Stat-less files always survive pruning (degrade-to-all semantics)."""
-    indexed, unknown, num_rows = [], [], {}
+    indexed, unknown, num_rows, schemas = [], [], {}, {}
     for p in paths:
-        meta = pq.ParquetFile(p).metadata
+        pf = pq.ParquetFile(p)
+        meta = pf.metadata
         num_rows[p] = meta.num_rows
+        schemas[p] = pf.schema_arrow
         fb = _footer_bbox(p, meta)
         if fb is None:
             unknown.append(p)
         else:
             indexed.append(fb)
-    return Manifest(indexed, unknown, num_rows)
+    return Manifest(indexed, unknown, num_rows, schemas)
 
 
 def prune_files(

@@ -286,7 +286,8 @@ def _one_theme_engine(spark, tmp_path, name="places_one"):
 def test_fresh_load_is_one_scan_one_write_one_count(spark, tmp_path):
     """A fresh load reads the pruned files once, writes one parquet copy
     (the grid layout, recorded as the snapview) and counts once: at most
-    7 Spark jobs, counted by job group."""
+    5 Spark jobs, counted by job group, none of them a schema-inference
+    job (the manifest's footer schema types the scan)."""
     eng, raw = _one_theme_engine(spark, tmp_path)
     bbox = (-180.0, -90.0, 0.0, 90.0)
     sc = spark.sparkContext
@@ -299,7 +300,13 @@ def test_fresh_load_is_one_scan_one_write_one_count(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("fresh-load-jobs")
     assert not res.cached and res.batches == 1
     assert res.rows == raw.count() > 0
-    assert 0 < len(jobs) <= 7, jobs
+    assert 0 < len(jobs) <= 5, jobs
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(s).name
+        for j in jobs for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert not any(name.startswith("parquet at") for name in stages), stages
 
     # exactly one parquet copy: the snapview record points at the layout
     store = eng.snapviews

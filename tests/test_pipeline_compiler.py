@@ -202,3 +202,64 @@ def test_spatial_auto_route_pair_budget(spark, monkeypatch):
     a = sorted(r["id"] for r in auto.select(pts["id"]).collect())
     b = sorted(r["id"] for r in auto2.select(pts["id"]).collect())
     assert a == b
+
+
+@pytest.mark.parametrize("search", ["", "machinery"])
+def test_nondeterministic_keeps_columns_and_caps(spark, search):
+    """deterministic=False drops the orders, not the output contract: the
+    same columns in the same order, at most `limit` rows, and no source
+    over its balanced cap."""
+    cat = catalog_cs(spark, SF_SMOKE)
+    exact = compile_pipeline(cat, [SRC_C, SRC_S], search=search, limit=10)
+    loose = compile_pipeline(
+        cat, [SRC_C, SRC_S], search=search, limit=10, deterministic=False
+    )
+    assert loose.columns == exact.columns
+    rows = loose.collect()
+    assert 0 < len(rows) <= 10
+    for src in ("places/customer", "places/supplier"):
+        assert sum(r["_source"] == src for r in rows) <= 5
+
+
+def test_null_geometry_gives_null_geojson(spark):
+    import pyspark.sql.functions as F
+
+    from overturemaps_duckdb_spark.functions.geo import st_point
+
+    # None coordinates give a NULL geometry
+    df = spark.createDataFrame(
+        [("a", 1.5, 2.25), ("b", None, None)], "id string, lon double, lat double"
+    )
+    theme = df.select(
+        "id",
+        F.col("id").alias("display_name"),
+        F.col("id").alias("search_name"),
+        st_point("lon", "lat").alias("geometry"),
+        F.lit("POINT").alias("geom_type"),
+        F.col("lon").alias("centroid_lon"),
+        F.col("lat").alias("centroid_lat"),
+    )
+    cat = Catalog(tables={"t": theme}, fields={})
+    src = Node(id="n1", type="source", table="t", key="k")
+    rows = {r["id"]: r["geojson"] for r in compile_pipeline(cat, [src]).collect()}
+    assert rows == {"a": '{"type":"Point","coordinates":[1.5,2.25]}', "b": None}
+
+
+def test_geojson_map_matches_st_asgeojson(spark):
+    """The compiled output's geojson is st_asgeojson over the same rows."""
+    import pyspark.sql.functions as F
+
+    from overturemaps_duckdb_spark.functions.geo import st_asgeojson
+
+    cat = catalog_cs(spark, SF_SMOKE)
+    out = compile_pipeline(cat, [SRC_C, SRC_S], limit=40)
+    want = {
+        r["id"]: r["g"]
+        for name in ("theme_customer", "theme_supplier")
+        for r in cat.tables[name]
+        .select("id", st_asgeojson(F.col("geometry")).alias("g"))
+        .collect()
+    }
+    got = out.select("id", "geojson").collect()
+    assert len(got) == 30  # 20 customers + all 10 suppliers at sf0.001
+    assert all(r["geojson"] == want[r["id"]] for r in got)

@@ -5,6 +5,8 @@ a cartesian) fails here instead of only showing up in bench numbers.
 
 All assertions are on the PRE-EXECUTION physical plan (driver-side only,
 no jobs) at sf0.001 — plan shape is scale-independent.
+test_union_edit_runs_one_job instead executes a warm pipeline edit and
+counts its jobs.
 """
 
 from __future__ import annotations
@@ -226,3 +228,95 @@ def test_minhash_index_is_pure_projection(spark, q):
         assert plan.count("zip_with(zip_with(zip_with(zip_with") == 1
     finally:
         idx.unpersist()
+
+
+def _own_plan(plan: str) -> str:
+    """The plan without the subtree each InMemoryRelation prints: those
+    are the cached frames' own plans (the theme ingest's st_point, the FTS
+    index build), which the query does not execute."""
+    out, cached_depth = [], None
+    for ln in plan.splitlines():
+        depth = len(ln) - len(ln.lstrip(" :|+-"))
+        if cached_depth is not None and depth > cached_depth:
+            continue
+        cached_depth = depth if "InMemoryRelation" in ln else None
+        out.append(ln)
+    return "\n".join(out)
+
+
+@pytest.mark.parametrize(
+    "qname,top_k",
+    # one top-k per source plus the root; pl6 (one source) also ranks its
+    # BM25 score relation before the broadcast join
+    [("pl1_union_balanced_limit", 3), ("pl2_search_ilike", 3),
+     ("pl3_bbox_filter", 3), ("pl6_search_fts", 3)],
+)
+def test_pipeline_balanced_limits_plan_as_top_k(spark, q, qname, top_k):
+    """Every per-source and final ORDER BY … LIMIT of a balanced-limit
+    pipeline plans as TakeOrderedAndProject: GeoJSON is one Arrow map
+    beneath the final top-k, not a UDF Project the optimizer pushes below
+    each branch's LIMIT (which split every Limit(Sort) into a
+    range-partitioned global sort with its own sampling job)."""
+    plan = _own_plan(_plan(q[qname](spark, SF_SMOKE)))
+    assert plan.count("TakeOrderedAndProject") == top_k, plan
+    assert "rangepartitioning" not in plan
+    assert "ArrowEvalPython" not in plan
+    assert plan.count("MapInArrow") == 1
+
+
+@pytest.mark.parametrize("qname", ["pl4_within_filter", "pl5_exclude_filter"])
+def test_pipeline_spatial_filters_keep_root_top_k(spark, q, qname):
+    """Spatial filters have no per-source limit; the final ORDER BY …
+    LIMIT stays a root TakeOrderedAndProject with no global sort."""
+    plan = _own_plan(_plan(q[qname](spark, SF_SMOKE)))
+    assert plan.splitlines()[1].lstrip(" :|+-").startswith(
+        "TakeOrderedAndProject"
+    ), plan
+    assert "rangepartitioning" not in plan
+
+
+def test_union_edit_runs_one_job(spark):
+    """Executed: after a warm call, a 3-source union edit over cached
+    catalog tables is one top-k job, not a sampling job plus a global sort
+    per branch."""
+    from overturemaps_duckdb_spark.plans.pipeline import (
+        Catalog,
+        Node,
+        compile_pipeline,
+    )
+    from overturemaps_duckdb_spark.queries.pipeline import (
+        FIELDS,
+        SRC_C,
+        SRC_S,
+        theme_customer,
+        theme_documents,
+        theme_supplier,
+    )
+
+    cat = Catalog(
+        tables={
+            "theme_customer": theme_customer(spark, SF_SMOKE),
+            "theme_supplier": theme_supplier(spark, SF_SMOKE),
+            "theme_documents": theme_documents(spark, SF_SMOKE),
+        },
+        fields=FIELDS,
+    )
+    nodes = [
+        SRC_C,
+        SRC_S,
+        Node(id="n3", type="combine", op="union", table="theme_documents",
+             key="docs/document"),
+    ]
+    compile_pipeline(cat, nodes).collect()  # warm: caches fill, workers start
+    sc = spark.sparkContext
+    sc.setJobGroup("union-edit-jobs", "one warm union edit")
+    try:
+        rows = compile_pipeline(cat, nodes).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("union-edit-jobs")
+    assert {r["_source"] for r in rows} == {
+        "places/customer", "places/supplier", "docs/document"
+    }
+    assert 0 < len(jobs) <= 2, jobs
